@@ -27,17 +27,11 @@ from .geo import in_bounding_box
 def explode_envelope(bronze: DataFrame) -> DataFrame:
     """One row per vehicle record (reference P1/P2).
 
-    ``explode(result)`` then flatten the struct.  The declared read schema
-    already projected away unused raw fields at parse time.
+    ``inline(result)`` explodes the array and flattens the struct in one
+    generator.  The declared read schema already projected away unused
+    raw fields at parse time, so the columns are BUS_SCHEMA's five.
     """
-    v = F.explode("result").alias("v")
-    return bronze.select(v).select(
-        F.col("v.Lines").alias("Lines"),
-        F.col("v.VehicleNumber").alias("VehicleNumber"),
-        F.col("v.Lat").alias("Lat"),
-        F.col("v.Lon").alias("Lon"),
-        F.col("v.Time").alias("Time"),
-    )
+    return bronze.select(F.inline("result"))
 
 
 def typed_projection(df: DataFrame) -> DataFrame:
@@ -48,30 +42,31 @@ def typed_projection(df: DataFrame) -> DataFrame:
     single malformed Time string would otherwise abort the whole batch
     with CANNOT_PARSE_TIMESTAMP — the cleanse contract is "cast, then
     DROP null rows", so a bad timestamp must become NULL and fall to
-    cleanse_filters' dropna, exactly what the reference's lax-mode cast
-    did.  (Lat/Lon need no try_: BRONZE_SCHEMA already declares them
+    cleanse_filters' null check, exactly what the reference's lax-mode
+    cast did.  (Lat/Lon need no try_: BRONZE_SCHEMA already declares them
     double, so the cast is a no-op.)
     """
+    time = F.try_to_timestamp(F.col("Time"), F.lit("yyyy-MM-dd HH:mm:ss"))
     return df.select(
         F.trim(F.col("Lines")).alias("Lines"),
         F.trim(F.col("VehicleNumber")).alias("VehicleNumber"),
         F.col("Lat").cast("double").alias("Lat"),
         F.col("Lon").cast("double").alias("Lon"),
-        F.try_to_timestamp(
-            F.col("Time"), F.lit("yyyy-MM-dd HH:mm:ss")
-        ).alias("Time"),
-    ).withColumn("date", F.to_date(F.col("Time")))
+        time.alias("Time"),
+        F.to_date(time).alias("date"),
+    )
 
 
 def cleanse_filters(df: DataFrame, current_date: str) -> DataFrame:
-    """dropna + geo box + date equality + non-empty Lines
-    (reference gtfstransformerSilver.py:41-44)."""
-    return (
-        df.dropna(how="any")
-        .filter(in_bounding_box(F.col("Lat"), F.col("Lon")))
-        .filter(F.col("date") == F.lit(current_date).cast("date"))
-        .filter(F.col("Lines") != "")
-    )
+    """No NULL in any column + geo box + date equality + non-empty Lines
+    (reference gtfstransformerSilver.py:41-44), as one filter.  A NaN
+    Lat/Lon, which ``dropna`` would also drop, fails the box: Spark
+    orders NaN above every double."""
+    keep = in_bounding_box(F.col("Lat"), F.col("Lon"))
+    for c in df.columns:
+        keep &= F.col(c).isNotNull()
+    keep &= F.col("date") == F.lit(current_date).cast("date")
+    return df.filter(keep & (F.col("Lines") != ""))
 
 
 def dedup_deterministic(

@@ -12,8 +12,10 @@ partition overwrite would no-op there and leave stale data) — idempotent
 backfills, no full-table rewrites (the reference overwrites the entire
 Silver/Gold tier every run, gtfstransformerSilver.py:59-60).
 
-The returned report DataFrame is the drill-down entry point; observe()
-metrics give drop-rate telemetry without extra passes (cleanse.py).
+The returned report DataFrame is the drill-down entry point.  ``run_batch``
+collects no drop-rate telemetry; ``cleanse.bronze_to_silver_observed``
+offers it through ``observe()`` without extra passes, but is not wired in
+here.
 """
 
 from __future__ import annotations

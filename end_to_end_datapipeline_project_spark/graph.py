@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register, spark_dsum, spark_dsum_rounded
+from .session import driver_side_listing
 from .sources import read_parquet_table
 
 PR_ITERS = 3
@@ -358,33 +359,6 @@ def write_adj_segment(half: DataFrame, path: str) -> None:
     )
 
 
-class _driver_side_listing:
-    """Keep partition discovery of the ≤ADJ_BUCKETS segment dirs on
-    the driver: above the default 32-path threshold Spark runs file
-    listing as a cluster job with one task per directory — measured
-    ~0.5 s × every pruned read here, 40% of the 0.1%-delta patch wall
-    — while a driver-side listing of a few hundred local dirs is
-    milliseconds.  A context manager that SCOPES the raised threshold
-    to the reads inside the ``with`` block (listing happens eagerly at
-    ``spark.read.parquet``), so the setting never leaks into unrelated
-    queries on the same session (ADVICE r14)."""
-
-    KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get(self.KEY, None)
-        self.spark.conf.set(self.KEY, "4096")
-
-    def __exit__(self, *exc) -> None:
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
-
-
 #: frontier sizes at or below this BROADCAST in the pruned stored-state
 #: reads (~32 MB of longs); above it the id semi-join falls back to a
 #: plain shuffle join.  The patch kernels' frontiers are delta-blast-
@@ -430,7 +404,7 @@ def _read_adj_pruned(
     )
     bkts = [r["b"] for r in per_bkt]
     n_ids = sum(r["count"] for r in per_bkt)
-    with _driver_side_listing(spark):
+    with driver_side_listing(spark):
         scan = None
         for d in dirs:
             seg = spark.read.parquet(d).select("src", "dst", "__bkt")
@@ -846,7 +820,7 @@ def _read_weights_pruned(
         .distinct()
         .collect()
     ]
-    with _driver_side_listing(spark):
+    with driver_side_listing(spark):
         scan = None
         for d in dirs:
             seg = spark.read.parquet(d).select(
@@ -890,7 +864,7 @@ def read_keyed_segments(
     bkts = [
         r[0] for r in keys.select(bucket.alias("b")).distinct().collect()
     ]
-    with _driver_side_listing(spark):
+    with driver_side_listing(spark):
         scan = None
         for d in dirs:
             seg = spark.read.parquet(d).select(*cols, "__bkt")

@@ -3,10 +3,17 @@
 
 Scale notes (100 TB):
 
-- The 8-output aggregate is one hash-aggregate shuffle on the group key
-  with map-side partial aggregation.  ``count_distinct`` forces a
-  two-phase expand; ``approx=True`` swaps in HLL++ (one phase, bounded
-  memory) — the right default at 100 TB where a ±2% vehicle count is fine.
+- The 8-output aggregate has one distinct aggregate, so Catalyst plans
+  it as a two-level aggregate with no Expand: per (group, vehicle) first,
+  then per group, counting the first level's non-null vehicles.  Input
+  hash-partitioned by the vehicle (the trajectory window's shuffle)
+  already satisfies the first level, so the report costs one shuffle, by
+  group, with map-side partial aggregation.  ``approx=True`` swaps in
+  HLL++ (one level, bounded memory): the choice when input is not
+  vehicle-partitioned and a ±2% vehicle count is fine.
+- The report is unordered: a global sort is a range-partition sampling
+  job plus a shuffle, and sorting belongs at presentation edges
+  (``top_k``, the CLI's top-N).
 - Top-k is sort+limit, which Catalyst rewrites to TakeOrderedAndProject —
   O(k) memory per partition, never a global sort.
 - The reference's drill-down collects the top-1 key to the driver and
@@ -30,7 +37,9 @@ def daily_report(
 ) -> DataFrame:
     """Per-group fleet report (reference gtfsGold.py:89-108).
 
-    8 aggregates + post-agg cost_of_1km with a nullif divide-by-zero guard.
+    8 aggregates + post-agg cost_of_1km; both divisions by an aggregate are
+    nullif-guarded, so a group with no distance or no non-null vehicle
+    yields NULL instead of DIVIDE_BY_ZERO under ANSI.
     """
     distinct = (
         F.approx_count_distinct(vehicle_col)
@@ -45,12 +54,14 @@ def daily_report(
         F.avg("speed_kmh").alias("avg_speed"),
         F.max("speed_kmh").alias("max_recorded_speed"),
         distinct.alias("unique_vehicles_count"),
-        (F.sum("dist_km") / distinct).alias("avg_dist_per_vehicle"),
+        (F.sum("dist_km") / F.nullif(distinct, F.lit(0))).alias(
+            "avg_dist_per_vehicle"
+        ),
     )
     report = agg.withColumn(
         "cost_of_1km",
         F.col("total_cost_pln") / F.nullif(F.col("total_distance_km"), F.lit(0.0)),
-    ).orderBy(F.desc("total_cost_pln"), F.asc(group_col))
+    )
     if round_to is not None:
         doubles = [
             "total_distance_km",

@@ -21,20 +21,32 @@ the portable configuration.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: Above this many paths Spark lists files and partitions as a cluster job
+#: with one task per path (default 32).  A landing day of 49 snapshot files
+#: costs three such jobs per streaming drain, ~0.3 s each at local[4], while
+#: a driver-side listing of a few thousand local paths takes milliseconds.
+LISTING_THRESHOLD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+DRIVER_LISTING_THRESHOLD = "4096"
 
 #: Keys that are correct ONLY for the single-JVM local[N] sandbox.  The 4 MB
 #: split sizing is file-size-relative (testdata files are 1-100 MB; the
 #: 128 MB default leaves 29 of 32 cores idle in the scan stage — measured 2x
-#: on TPC-H Q1 shapes).  On a real cluster with >128 MB parquet files the
-#: Spark defaults are right, so none of these may leak into a cluster conf.
+#: on TPC-H Q1 shapes).  In local[N] a "parallel" listing runs in the same
+#: JVM against the same disk, so the listing threshold is pure scheduling
+#: cost there.  On a real cluster with >128 MB parquet files and remote
+#: object stores the Spark defaults are right, so none of these may leak
+#: into a cluster conf.
 _LOCAL_ONLY_KEYS = frozenset(
     {
         "spark.sql.files.maxPartitionBytes",
         "spark.sql.files.openCostInBytes",
         "spark.driver.memory",
         "spark.ui.enabled",
+        LISTING_THRESHOLD_KEY,
     }
 )
 
@@ -82,6 +94,7 @@ def build_conf(
         conf["spark.sql.files.openCostInBytes"] = str(512 * 1024)
         conf["spark.driver.memory"] = os.environ.get("SPARK_DRIVER_MEMORY", "90g")
         conf["spark.ui.enabled"] = "false"
+        conf[LISTING_THRESHOLD_KEY] = DRIVER_LISTING_THRESHOLD
     conf.update(extra_conf or {})
     return master, conf
 
@@ -108,8 +121,9 @@ def get_spark(
     - ``shuffle.partitions`` sized to the cluster, not the 200 default.
     - Arrow for any pandas edge (vectorized transfer, never row-at-a-time).
 
-    Local-only knobs (file-split sizing, driver memory) apply only when the
-    resolved master is ``local[...]`` — see :data:`_LOCAL_ONLY_KEYS`.
+    Local-only knobs (file-split sizing, driver memory, driver-side
+    listing) apply only when the resolved master is ``local[...]`` — see
+    :data:`_LOCAL_ONLY_KEYS`.
     """
     master, conf = build_conf(
         master=master, shuffle_partitions=shuffle_partitions, extra_conf=extra_conf
@@ -120,3 +134,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def driver_side_listing(spark: SparkSession):
+    """List the paths read inside the ``with`` block on the driver, on
+    any master, then restore the session's previous threshold (or unset
+    it), so the setting never leaks into unrelated queries.  Batch reads
+    list eagerly at ``spark.read``, so scoping suffices for them; a
+    file-source stream lists at trigger time through the live session
+    conf, which only the local-master pin in :func:`build_conf` covers."""
+    prev = spark.conf.get(LISTING_THRESHOLD_KEY, None)
+    spark.conf.set(LISTING_THRESHOLD_KEY, DRIVER_LISTING_THRESHOLD)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(LISTING_THRESHOLD_KEY)
+        else:
+            spark.conf.set(LISTING_THRESHOLD_KEY, prev)

@@ -58,6 +58,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import driver_side_listing
+
 
 class StateStore:
     """Atomic multi-table parquet state under one root directory."""
@@ -139,25 +141,14 @@ class StateStore:
             if schema is None:
                 raise KeyError(f"state table {name!r} has no commits")
             return spark.createDataFrame([], schema)
-        # keep partition discovery of bucketed segments on the driver
-        # (above 32 paths Spark lists via a one-task-per-dir cluster
-        # job — measured ~0.5 s per read of a 512-bucket segment).
-        # Scoped set/restore: listing happens eagerly inside
-        # spark.read.parquet, so the raised threshold never leaks into
-        # unrelated queries on the session (ADVICE r14)
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "4096")
-        try:
+        # keep partition discovery of bucketed segments on the driver on
+        # any master (above 32 paths Spark lists via a one-task-per-dir
+        # cluster job — measured ~0.5 s per read of a 512-bucket segment)
+        with driver_side_listing(spark):
             out = None
             for d in dirs:
                 part = spark.read.parquet(d)
                 out = part if out is None else out.unionByName(part)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         return out
 
     # --- the commit -------------------------------------------------------

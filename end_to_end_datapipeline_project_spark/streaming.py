@@ -33,7 +33,14 @@ def read_bronze_stream(
     streaming reads never infer).  ``bronze_dir`` may be a glob (e.g.
     ``.../year=*/month=*/day=*/*.json`` for the reference's partitioned
     landing zone); ``max_files_per_trigger`` sets the micro-batch size —
-    smaller values exercise more batch boundaries in parity tests."""
+    smaller values exercise more batch boundaries in parity tests.
+
+    Listing contract: the file source lists the glob here and again at
+    every trigger, through the session's live conf.  A glob over more
+    than 32 files (a landing day holds up to 49) lists as a cluster job
+    unless the session keeps listing on the driver, which
+    ``session.build_conf`` pins for local masters; a scoped setting
+    around this call cannot reach the trigger-time listings."""
     return (
         spark.readStream.schema(BRONZE_SCHEMA)
         .option("multiline", "true")
@@ -72,7 +79,15 @@ def bronze_to_silver_stream(
 def write_silver_stream(
     silver: DataFrame, out_dir: str, checkpoint_dir: str, available_now: bool = True
 ):
-    """Exactly-once parquet sink, partitioned by date, checkpointed."""
+    """Exactly-once parquet sink, partitioned by date, checkpointed.
+
+    No-data-batch contract: an availableNow drain whose data moved the
+    watermark ends with one batch that reads no data; it evicts expired
+    dedup state and records the moved watermark in the offset log.  It
+    stays on: the late-row filter of a batch uses the previous batch's
+    watermark, so without it the next run's first data batch would keep
+    rows the moved watermark marks late (pinned by
+    ``test_watermark_drops_late_duplicates_state``)."""
     writer = (
         silver.writeStream.format("parquet")
         .option("path", out_dir)

@@ -52,32 +52,30 @@ def enrich(df: DataFrame, cfg: TrajectoryConfig = TrajectoryConfig()) -> DataFra
     w = Window.partitionBy(cfg.key).orderBy(*order)
 
     lat, lon, time = F.col(cfg.lat), F.col(cfg.lon), F.col(cfg.time)
-    out = (
-        df.withColumn("prev_lat", F.lag(lat).over(w))
-        .withColumn("prev_lon", F.lag(lon).over(w))
-        .withColumn("prev_time", F.lag(time).over(w))
-        .withColumn(
-            "dist_km",
-            F.coalesce(
-                haversine_km(F.col("prev_lat"), F.col("prev_lon"), lat, lon),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn(
-            "fuel_l", F.col("dist_km") / 100.0 * cfg.fuel_consumption_l_per_100km
-        )
-        .withColumn("cost_pln", F.col("fuel_l") * cfg.fuel_price_per_l)
-        .withColumn(
-            "diff_time_sec",
-            F.unix_timestamp(time) - F.unix_timestamp(F.col("prev_time")),
-        )
-        .withColumn(
-            "speed_kmh",
-            F.when(
-                F.col("diff_time_sec") > 0,
-                F.col("dist_km") / F.col("diff_time_sec") * 3600.0,
-            ).otherwise(F.lit(0.0)),
-        )
+    # two projections, each built in one driver round trip: the lags
+    # first, because Catalyst does not merge repeated window expressions
+    # (composing lag() into every derived column plans 22 lags, not 3)
+    lagged = df.select(
+        "*",
+        F.lag(lat).over(w).alias("prev_lat"),
+        F.lag(lon).over(w).alias("prev_lon"),
+        F.lag(time).over(w).alias("prev_time"),
+    )
+    dist_km = F.coalesce(
+        haversine_km(F.col("prev_lat"), F.col("prev_lon"), lat, lon),
+        F.lit(0.0),
+    )
+    fuel_l = dist_km / 100.0 * cfg.fuel_consumption_l_per_100km
+    diff_time_sec = F.unix_timestamp(time) - F.unix_timestamp(F.col("prev_time"))
+    out = lagged.select(
+        "*",
+        dist_km.alias("dist_km"),
+        fuel_l.alias("fuel_l"),
+        (fuel_l * cfg.fuel_price_per_l).alias("cost_pln"),
+        diff_time_sec.alias("diff_time_sec"),
+        F.when(diff_time_sec > 0, dist_km / diff_time_sec * 3600.0)
+        .otherwise(F.lit(0.0))
+        .alias("speed_kmh"),
     )
     if cfg.speed_cutoff_kmh is not None:
         out = out.filter(F.col("speed_kmh") <= cfg.speed_cutoff_kmh)

@@ -106,3 +106,71 @@ def test_rerun_with_zero_rows_replaces_stale_partition(spark, tmp_path):
     )
     assert report2.count() == 0  # stale Gold must NOT resurface
     assert spark.read.parquet(silver).count() == 0
+
+
+def test_medallion_pass_job_floor(spark, tmp_path):
+    """The job count of one fixed-shape medallion pass: a landing day of
+    34 snapshots (above Spark's 32-path parallel-listing threshold)
+    through ``run_transform``, then an availableNow Silver drain.  The
+    transform is Silver 2 jobs (parse, dedup + write), Gold 3 (read-back
+    shuffle, window + per-vehicle aggregate, per-line aggregate + write)
+    and the top-N pandas edge 1; the drain is its data batch plus the
+    watermark's no-data batch; no file listing runs as a job."""
+    from end_to_end_datapipeline_project_spark import __main__ as cli
+    from end_to_end_datapipeline_project_spark import streaming
+
+    bronze = str(tmp_path / "bronze")
+    for i in range(34):
+        t = f"{DAY} 12:{i // 4:02d}:{i % 4 * 15:02d}"
+        _land(
+            bronze, 2026, 2, 23, f"poll{i:02d}",
+            [
+                rec(str(v % 3), str(1000 + v), t, lat=52.2 + i * 1e-4 * v)
+                for v in range(6)
+            ],
+        )
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    args = cli.build_parser().parse_args(
+        [
+            "--mode", "transform", "--bronze-dir", bronze,
+            "--silver-dir", str(tmp_path / "silver"),
+            "--gold-dir", str(tmp_path / "gold"), "--date", DAY,
+        ]
+    )
+    sc.setJobGroup("floor-transform", "transform")
+    try:
+        cli.run_transform(args, spark=spark, out=lambda s: None)
+        sc.setJobGroup("floor-stream", "stream")
+        q = streaming.write_silver_stream(
+            streaming.bronze_to_silver_stream(
+                streaming.read_bronze_stream(
+                    spark, f"{bronze}/year=2026/month=02/day=23/*.json"
+                ),
+                DAY,
+            ),
+            str(tmp_path / "stream"),
+            str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def jobs(group):
+        return list(tracker.getJobIdsForGroup(group))
+
+    stream_jobs = jobs("floor-stream") + jobs(str(q.runId))
+    descriptions = [
+        store.job(j).description()
+        for j in jobs("floor-transform") + stream_jobs
+    ]
+    listing = [
+        d.get() for d in descriptions
+        if d.isDefined() and d.get().startswith("Listing leaf files")
+    ]
+    assert listing == []
+    assert len(jobs("floor-transform")) == 6
+    assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True, False]
+    assert len(stream_jobs) == 2

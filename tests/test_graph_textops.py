@@ -422,6 +422,8 @@ def test_read_adj_pruned_plan_prunes_and_gates_broadcast(spark, tmp_path):
     seg = str(tmp_path / "adj" / "seg0")
     graph.write_adj_segment(half, seg)
     ids = spark.range(40).select("id").localCheckpoint()
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    listing_before = spark.conf.get(key, None)
 
     out = graph._read_adj_pruned(spark, [seg], ids)
     rows = out.collect()
@@ -452,8 +454,7 @@ def test_read_adj_pruned_plan_prunes_and_gates_broadcast(spark, tmp_path):
     assert empty.columns == ["src", "dst"] and empty.count() == 0
 
     # conf scoping: the raised listing threshold never leaks (ADVICE r14)
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(key, None) == listing_before
 
 
 def test_co_supply_half_pins_fanout_width(spark, monkeypatch):

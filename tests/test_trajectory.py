@@ -73,7 +73,11 @@ def test_fuel_cost_derivation(spark):
 
 
 def test_report_contract_and_values(spark):
-    rep = daily_report(enrich(sample_silver(spark)))
+    # line 7's only ping has no vehicle: no vehicle to average over
+    null_vehicle = make_silver_df(
+        spark, [("7", None, 52.2, 21.0, f"{DAY} 12:00:00")]
+    )
+    rep = daily_report(enrich(sample_silver(spark).unionByName(null_vehicle)))
     assert set(rep.columns) == set(GOLD_REPORT_COLUMNS)
     by_line = {r.Lines: r for r in rep.collect()}
     assert by_line["180"].unique_vehicles_count == 2
@@ -82,6 +86,10 @@ def test_report_contract_and_values(spark):
     assert abs(by_line["180"].cost_of_1km - 1.95) < 1e-9
     # zero-distance group → NULL via nullif guard
     assert by_line["219"].cost_of_1km is None
+    # vehicle-less group → NULL per-vehicle average, not DIVIDE_BY_ZERO
+    assert by_line["7"].unique_vehicles_count == 0
+    assert by_line["7"].data_points_count == 0
+    assert by_line["7"].avg_dist_per_vehicle is None
 
 
 def test_topk_and_drilldowns(spark):
